@@ -18,7 +18,10 @@ explicit salting for skewed document sizes, per-partition
 checkpoint/resume, and extraction metrics.
 
 The heavy per-document operators are pure-Python functions (unit
-testable without Spark) wrapped in ``mapInPandas``; parallelism is
+testable without Spark). Each one reaches Spark through
+``rows.map_rows``, the one Python-worker boundary: it owns how a column
+of documents becomes per-row calls and how their rows go back as
+Arrow-batched pandas frames; parallelism is
 across documents, matching the reference's worker-pool design
 (/root/reference/js/extractTextDir.js).
 """

@@ -17,7 +17,6 @@ matching the reference's sorted-index quantile without
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from ..functions.stats import quantile, round6
 from ..model import OcrPage
@@ -182,6 +181,8 @@ def font_observations_df(df, spark=None):
     from pyspark.sql.types import (
         DoubleType, StringType, StructField, StructType)
 
+    from ..rows import map_rows
+
     schema = StructType([
         StructField("url", StringType()),
         StructField("family", StringType()),
@@ -191,24 +192,17 @@ def font_observations_df(df, spark=None):
         StructField("value", DoubleType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def row(url, html):
         from ..extract import extract_document
 
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for r in char_observations(res.pages):
-                    out["url"].append(url)
-                    for k in ("family", "style", "kind", "key", "value"):
-                        out[k].append(r[k])
-            yield pd.DataFrame(out)
+        res = extract_document(html)
+        if res.error is not None:
+            return
+        for r in char_observations(res.pages):
+            yield (url, r["family"], r["style"], r["kind"], r["key"],
+                   r["value"])
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return map_rows(df, ["url", "html"], row, schema)
 
 
 def font_metrics_df(df):

@@ -116,25 +116,18 @@ def warc_to_table(df, bytes_col: str = "warc"):
         StructType,
     )
 
+    from ..rows import map_rows
+
     schema = StructType([
         StructField("url", StringType()),
         StructField("warc_ts", StringType()),
         StructField("html", BinaryType()),
     ])
 
-    def fn(batches):
-        import pandas as pd
+    def row(blob):
+        try:
+            yield from warc_records(blob)
+        except ValueError:
+            return  # malformed archive: skip, never fatal
 
-        for pdf in batches:
-            out = {"url": [], "warc_ts": [], "html": []}
-            for blob in pdf[bytes_col]:
-                try:
-                    for uri, date, payload in warc_records(bytes(blob)):
-                        out["url"].append(uri)
-                        out["warc_ts"].append(date)
-                        out["html"].append(payload)
-                except ValueError:
-                    continue  # malformed archive: skip, never fatal
-            yield pd.DataFrame(out)
-
-    return df.select(bytes_col).mapInPandas(fn, schema=schema)
+    return map_rows(df, [bytes_col], row, schema)

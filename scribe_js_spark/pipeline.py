@@ -6,7 +6,7 @@ per-document extraction, per-file errors never abort the batch):
 
     input df (url, warc_ts, html, text, lang)
       -> [optional salt repartition by size bucket]     # skew handling
-      -> mapInPandas(extract)                           # one row = one doc,
+      -> rows.map_rows(extract)                         # one row = one doc,
                                                         # zero shuffles in the
                                                         # hot path
       -> (url, text, format, page_count, word_count, error[, spans])
@@ -14,7 +14,9 @@ per-document extraction, per-file errors never abort the batch):
 Design notes for 100 TB scale:
 - One row = one document end-to-end: the parse, paragraph assignment and
   text fold all happen inside a single Arrow-batched UDF, so the only
-  shuffle in the whole job is the optional salting repartition.
+  shuffle in the whole job is the optional salting repartition. Every
+  per-document UDF here runs through ``rows.map_rows``, the one
+  Python-worker boundary of the package.
 - Skew: document parse cost varies by orders of magnitude. ``salt=True``
   hash-repartitions on (size_bucket, url) so the 1% of 200-500-page
   documents spread evenly instead of stacking in input-split order.
@@ -29,13 +31,13 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
-import os
-from typing import Iterator, Optional
+from typing import Optional
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -44,6 +46,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .rows import map_rows
 
 SPAN_STRUCT = StructType([
     StructField("page_n", IntegerType()),
@@ -89,13 +93,12 @@ def session_conf(builder):
         # Arrow batches are bounded by BYTES (the load-bearing cap for
         # multi-MB document rows: 16 MB/batch regardless of row count —
         # verified on this Spark: a batch closes when EITHER cap is hit,
-        # for mapInArrow and mapInPandas alike). The record cap is a
+        # for Arrow- and pandas-batched UDFs alike). The record cap is a
         # secondary bound; 64 would fragment narrow-row Python stages
         # (e.g. 16-byte pair rows) into ~10 us-a-piece micro-batches,
         # so it sits at 4096 now that the byte cap carries the memory
-        # contract. Env-overridable for other deployments.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_MAX_RECORDS", "4096"))
+        # contract.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 * 1024 * 1024))
         # Fine-grained input splits: document rows are heavy to *process*
         # relative to their bytes, so target many small scan partitions
@@ -107,59 +110,18 @@ def session_conf(builder):
     )
 
 
-def _extract_batches(batches, with_spans: bool):
-    import pandas as pd
+def _extract_whole(df: DataFrame, with_spans: bool) -> DataFrame:
+    """Whole-document extraction: one output row per input document."""
+    schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
+    fields = schema.names[1:]
 
-    from .extract import extract_with_spans
+    def row(url, html):
+        from .extract import extract_with_spans
 
-    for pdf in batches:
-        out = {
-            "url": [], "text": [], "format": [], "error": [],
-            "page_count": [], "word_count": [],
-        }
-        if with_spans:
-            out["spans"] = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            rec = extract_with_spans(bytes(html), with_spans=with_spans)
-            out["url"].append(url)
-            out["text"].append(rec["text"])
-            out["format"].append(rec["format"])
-            out["error"].append(rec["error"])
-            out["page_count"].append(rec["page_count"])
-            out["word_count"].append(rec["word_count"])
-            if with_spans:
-                out["spans"].append(rec["spans"])
-        yield pd.DataFrame(out)
+        rec = extract_with_spans(html, with_spans=with_spans)
+        yield (url, *[rec[f] for f in fields])
 
-
-def _extract_batches_arrow(batches):
-    """Arrow-native extraction (no-spans path): consumes and produces
-    ``pyarrow.RecordBatch`` directly. Skips the pandas layer entirely —
-    the url column passes through zero-copy and the ~100KB document
-    blobs avoid one object-dtype boxing per direction, which is a
-    measurable share of the Spark-vs-multiprocessing overhead at high
-    core counts (BENCH/BASELINE.md)."""
-    import pyarrow as pa
-
-    from .extract import extract_with_spans
-
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url"))
-        htmls = rb.column(rb.schema.get_field_index("html"))
-        text, fmt, err, pc, wc = [], [], [], [], []
-        for h in htmls:
-            rec = extract_with_spans(h.as_py(), with_spans=False)
-            text.append(rec["text"])
-            fmt.append(rec["format"])
-            err.append(rec["error"])
-            pc.append(rec["page_count"])
-            wc.append(rec["word_count"])
-        yield pa.RecordBatch.from_arrays(
-            [urls, pa.array(text, pa.string()),
-             pa.array(fmt, pa.string()), pa.array(err, pa.string()),
-             pa.array(pc, pa.int32()), pa.array(wc, pa.int32())],
-            names=["url", "text", "format", "error",
-                   "page_count", "word_count"])
+    return map_rows(df, ["url", "html"], row, schema)
 
 
 def salt_by_size(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
@@ -232,30 +194,16 @@ def extract_text(
     # parallelism gain; fine-grained row groups in the input file give
     # the scan its parallelism without moving bytes (round 6).
 
-    schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
-
-    # mapInArrow skips the pandas boxing layer, but an interleaved A/B
-    # at local[32] (tools/bench_arrow_ab.py: pandas 13.3s vs arrow
-    # 16.3s, best-of-3 alternating) measured it 22% SLOWER here — the
-    # per-value .as_py() calls cost more than pandas' bulk object
-    # conversion. It stays opt-in for re-measurement on other shapes.
-    use_arrow = (not with_spans
-                 and os.environ.get("SPARK_GRAFT_ARROW", "0") == "1")
-    if use_arrow:
-        small_res = small.mapInArrow(_extract_batches_arrow, schema=schema)
-    else:
-        def fn(batches: Iterator) -> Iterator:
-            return _extract_batches(batches, with_spans)
-
-        small_res = small.mapInPandas(fn, schema=schema)
+    # One extraction path: an Arrow-native variant skipped the pandas
+    # boxing layer but measured 22% SLOWER in an interleaved A/B at
+    # local[32] (pandas 13.3s vs arrow 16.3s, best-of-3 alternating;
+    # the one-off A/B script has since been removed) — per-value
+    # .as_py() calls cost more than pandas' bulk object conversion.
+    small_res = _extract_whole(small, with_spans)
     if big is None:
         return small_res
     big_res = _extract_paged(big, with_spans, num_partitions)
     return small_res.unionByName(big_res)
-
-
-def _span_free(fields):
-    return [f for f in fields if f.name != "spans"]
 
 
 def _extract_paged(big: DataFrame, with_spans: bool,
@@ -264,44 +212,27 @@ def _extract_paged(big: DataFrame, with_spans: bool,
     parse per page -> reassemble per url. Page texts concatenate with
     '\\n' (a page boundary is always a paragraph boundary in the reflow
     fold), so the result is byte-identical to the whole-document path."""
-    import pandas as pd
-
     split_schema = StructType([
         StructField("url", StringType()),
         StructField("format", StringType()),
         StructField("page_n", IntegerType()),
         StructField("page_str", StringType()),
-        StructField("html", df_binary_type()),
+        StructField("html", BinaryType()),
         StructField("error", StringType()),
     ])
 
-    def split_fn(batches: Iterator) -> Iterator:
+    def split_row(url, html):
         from .extract import split_document_pages
 
-        for pdf in batches:
-            out = {"url": [], "format": [], "page_n": [], "page_str": [],
-                   "html": [], "error": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                fmt, pages, err = split_document_pages(bytes(html))
-                if err is not None or pages is None:
-                    # non-splittable or failed: single whole-doc row
-                    out["url"].append(url)
-                    out["format"].append(fmt)
-                    out["page_n"].append(-1)
-                    out["page_str"].append(None)
-                    out["html"].append(bytes(html))
-                    out["error"].append(err)
-                    continue
-                for i, p in enumerate(pages):
-                    out["url"].append(url)
-                    out["format"].append(fmt)
-                    out["page_n"].append(i)
-                    out["page_str"].append(p)
-                    out["html"].append(None)
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
+        fmt, pages, err = split_document_pages(html)
+        if err is not None or pages is None:
+            # non-splittable or failed: single whole-doc row
+            yield url, fmt, -1, None, html, err
+            return
+        for i, p in enumerate(pages):
+            yield url, fmt, i, p, None, None
 
-    pages_df = big.mapInPandas(split_fn, schema=split_schema)
+    pages_df = map_rows(big, ["url", "html"], split_row, split_schema)
     # The page shuffle: spread one document's pages across the cluster.
     pages_df = pages_df.repartition(
         *( [num_partitions] if num_partitions else [] ), "url", "page_n")
@@ -318,45 +249,27 @@ def _extract_paged(big: DataFrame, with_spans: bool,
         page_fields.append(StructField("spans", ArrayType(SPAN_STRUCT)))
     page_schema = StructType(page_fields)
 
-    def parse_fn(batches: Iterator) -> Iterator:
+    def parse_row(url, fmt, page_n, page_str, html, err):
         from .extract import extract_single_page, extract_with_spans
 
-        for pdf in batches:
-            out = {"url": [], "format": [], "page_n": [], "text": [],
-                   "error": [], "word_count": []}
-            if with_spans:
-                out["spans"] = []
-            for url, fmt, page_n, page_str, html, err in zip(
-                    pdf["url"], pdf["format"], pdf["page_n"],
-                    pdf["page_str"], pdf["html"], pdf["error"]):
-                if err is not None:
-                    rec = {"text": None, "error": err, "word_count": 0,
-                           "spans": []}
-                    fmt_out = fmt
-                elif page_n == -1:
-                    whole = extract_with_spans(
-                        bytes(html), with_spans=with_spans)
-                    rec = {"text": whole["text"], "error": whole["error"],
-                           "word_count": whole["word_count"],
-                           "spans": whole["spans"]}
-                    fmt_out = whole["format"]
-                    # encode page_count via page_n for whole-doc rows
-                    page_n = -1 - whole["page_count"]
-                else:
-                    rec = extract_single_page(
-                        fmt, page_str, int(page_n), with_spans=with_spans)
-                    fmt_out = fmt
-                out["url"].append(url)
-                out["format"].append(fmt_out)
-                out["page_n"].append(int(page_n))
-                out["text"].append(rec["text"])
-                out["error"].append(rec["error"])
-                out["word_count"].append(rec["word_count"])
-                if with_spans:
-                    out["spans"].append(rec["spans"])
-            yield pd.DataFrame(out)
+        if err is not None:
+            rec = {"text": None, "error": err, "word_count": 0,
+                   "spans": []}
+        elif page_n == -1:
+            rec = extract_with_spans(html, with_spans=with_spans)
+            fmt = rec["format"]
+            # encode page_count via page_n for whole-doc rows
+            page_n = -1 - rec["page_count"]
+        else:
+            rec = extract_single_page(
+                fmt, page_str, page_n, with_spans=with_spans)
+        out = (url, fmt, page_n, rec["text"], rec["error"],
+               rec["word_count"])
+        if with_spans:
+            out += (rec["spans"],)
+        yield out
 
-    parsed = pages_df.mapInPandas(parse_fn, schema=page_schema)
+    parsed = map_rows(pages_df, split_schema.names, parse_row, page_schema)
 
     # Reassemble per document. Page texts sort by page_n; empty pages
     # (no lines) contribute nothing, matching writeText's skip.
@@ -402,12 +315,6 @@ def _extract_paged(big: DataFrame, with_spans: bool,
     return assembled.select(*cols)
 
 
-def df_binary_type():
-    from pyspark.sql.types import BinaryType
-
-    return BinaryType()
-
-
 def extract_spans(df: DataFrame, **kwargs) -> DataFrame:
     """Exploded ordered span rows: one row per word
     (expected_spans schema, FIXTURES.md §4)."""
@@ -425,10 +332,6 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
     one row, so the cross-page pass (recurring header keys, folio
     sequences) needs no shuffle — the grouped-pass analog of the
     reference's main-thread analyzeLayout join (SURVEY.md §3.1 step 3)."""
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType
-
     schema = StructType([
         StructField("url", StringType()),
         StructField("page_n", IntegerType()),
@@ -436,25 +339,18 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
+    def row(url, html):
         from .extract import extract_document
         from .operators.layout_doc import analyze_layout_doc, collect_par_roles
 
-        for pdf in batches:
-            out = {"url": [], "page_n": [], "par_n": [], "par_type": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(res.pages)
-                for r in collect_par_roles(res.pages):
-                    out["url"].append(url)
-                    out["page_n"].append(r["page_n"])
-                    out["par_n"].append(r["par_n"])
-                    out["par_type"].append(r["par_type"])
-            yield pd.DataFrame(out)
+        res = extract_document(html)
+        if res.error is not None:
+            return
+        analyze_layout_doc(res.pages)
+        for r in collect_par_roles(res.pages):
+            yield url, r["page_n"], r["par_n"], r["par_type"]
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return map_rows(df, ["url", "html"], row, schema)
 
 
 def extraction_metrics(result: DataFrame) -> DataFrame:
@@ -580,69 +476,54 @@ def write_searchable_pdfs(df: DataFrame, text_mode: str = "invis",
     distributed form of the reference's extract->writePdf flow. Zero
     shuffles: extraction and writing happen in one Arrow-batched UDF
     per document."""
-    from pyspark.sql.types import BinaryType
-
     schema = StructType([
         StructField("url", StringType()),
         StructField("pdf", BinaryType()),
         StructField("error", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def row(url, html):
         from .export.pdf import write_text_pdf
         from .extract import extract_document
 
-        for pdf_batch in batches:
-            out = {"url": [], "pdf": [], "error": []}
-            for url, html in zip(pdf_batch["url"], pdf_batch["html"]):
-                blob = None
-                err = None
-                try:
-                    res = extract_document(bytes(html))
-                    if res.error is not None:
-                        err = res.error
-                    else:
-                        blob = write_text_pdf(
-                            res.pages, text_mode=text_mode,
-                            on_unencodable=on_unencodable)
-                except Exception as e:  # noqa: BLE001 — never-fatal
-                    err = f"write_failure: {e}"
-                out["url"].append(url)
-                out["pdf"].append(blob)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        blob = None
+        err = None
+        try:
+            res = extract_document(html)
+            if res.error is not None:
+                err = res.error
+            else:
+                blob = write_text_pdf(
+                    res.pages, text_mode=text_mode,
+                    on_unencodable=on_unencodable)
+        except Exception as e:  # noqa: BLE001 — never-fatal
+            err = f"write_failure: {e}"
+        yield url, blob, err
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return map_rows(df, ["url", "html"], row, schema)
 
 
 def register_sql_functions(spark: SparkSession) -> None:
     """Expose the engine to pure Spark SQL: after this,
-    ``SELECT scribe_extract_text(html) FROM corpus`` works anywhere a
-    SQL string does. All three functions are Arrow-batched pandas UDFs
-    over the same per-document core the DataFrame API uses.
+    ``SELECT scribe_extract(html).text FROM corpus`` works anywhere a
+    SQL string does. Both functions are Arrow-batched pandas UDFs over
+    the same per-document core the DataFrame API uses.
 
-    - scribe_extract_text(binary) -> string (NULL on parse failure)
-    - scribe_extract_error(binary) -> string (NULL on success)
-    - scribe_detect_format(binary) -> string
+    - scribe_extract(binary) -> struct<text, format, error, page_count,
+      word_count>: one parse per document, the same values as
+      ``extract_text`` (text NULL on parse failure)
+    - scribe_detect_format(binary) -> string (detection only, no parse)
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def _text(html):
-        from .extract import extract_document
+    fields = EXTRACT_SCHEMA.names[1:]
 
-        def one(b):
-            r = extract_document(bytes(b))
-            return r.text if r.error is None else None
+    def _extract(html):
+        from .extract import extract_with_spans
 
-        return html.map(one)
-
-    def _error(html):
-        from .extract import extract_document
-
-        return html.map(lambda b: extract_document(bytes(b)).error)
+        recs = [extract_with_spans(bytes(b), with_spans=False) for b in html]
+        return pd.DataFrame({f: [r[f] for r in recs] for f in fields})
 
     def _format(html):
         from .operators.detect import detect_document_format
@@ -651,10 +532,9 @@ def register_sql_functions(spark: SparkSession) -> None:
 
     # `from __future__ import annotations` stringifies hints, which
     # pandas_udf cannot inspect — attach real type objects instead
-    for fn in (_text, _error, _format):
-        fn.__annotations__ = {"html": pd.Series, "return": pd.Series}
-    spark.udf.register("scribe_extract_text", pandas_udf(_text, "string"))
-    spark.udf.register("scribe_extract_error",
-                       pandas_udf(_error, "string"))
+    _extract.__annotations__ = {"html": pd.Series, "return": pd.DataFrame}
+    _format.__annotations__ = {"html": pd.Series, "return": pd.Series}
+    spark.udf.register("scribe_extract", pandas_udf(
+        _extract, StructType(EXTRACT_SCHEMA.fields[1:])))
     spark.udf.register("scribe_detect_format",
                        pandas_udf(_format, "string"))

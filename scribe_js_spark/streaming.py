@@ -6,7 +6,7 @@ Spark-native analog of re-running `extractTextDir` over a growing
 directory:
 
 - ``stream_extract_text``: ``readStream`` over a corpus directory ->
-  the identical mapInPandas extraction -> ``writeStream`` with
+  the identical ``map_rows`` extraction -> ``writeStream`` with
   checkpointing. With ``Trigger.AvailableNow`` this is an incremental
   batch: each invocation processes only files added since the last
   checkpoint (the Iceberg-snapshot incremental pattern from SURVEY.md
@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .pipeline import EXTRACT_SCHEMA, _extract_batches
+from .pipeline import _extract_whole
 
 CORPUS_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
@@ -39,13 +39,9 @@ def stream_extract_text(spark: SparkSession, input_dir: str,
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
-        .select("url", "html")
     )
 
-    def fn(batches):
-        return _extract_batches(batches, with_spans=False)
-
-    extracted = stream.mapInPandas(fn, schema=EXTRACT_SCHEMA)
+    extracted = _extract_whole(stream, with_spans=False)
     writer = (
         extracted.writeStream
         .format("parquet")

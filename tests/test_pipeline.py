@@ -23,16 +23,19 @@ def corpus_df(spark):
 
 
 def test_extract_text_byte_identical(spark, corpus_df):
-    result = extract_text(corpus_df, salt=True, num_partitions=4)
-    joined = (
-        result.alias("r")
-        .join(corpus_df.select("url", F.col("text").alias("expected")), on="url")
-    )
-    rows = joined.collect()
-    assert len(rows) == N_DOCS
-    for row in rows:
-        assert row["error"] is None, f"{row['url']}: {row['error']}"
-        assert row["text"] == row["expected"], row["url"]
+    for with_spans in (False, True):
+        result = extract_text(corpus_df, with_spans=with_spans, salt=True,
+                              num_partitions=4)
+        joined = (
+            result.alias("r")
+            .join(corpus_df.select("url", F.col("text").alias("expected")),
+                  on="url")
+        )
+        rows = joined.collect()
+        assert len(rows) == N_DOCS
+        for row in rows:
+            assert row["error"] is None, f"{row['url']}: {row['error']}"
+            assert row["text"] == row["expected"], row["url"]
 
 
 def test_extract_spans_schema_and_order(spark, corpus_df):

@@ -11,17 +11,18 @@ def test_sql_extraction_matches_dataframe_api(spark, tmp_path):
     df.createOrReplaceTempView("corpus")
     register_sql_functions(spark)
     sql_rows = {r["url"]: r for r in spark.sql(
-        "SELECT url, scribe_extract_text(html) AS text,"
-        "       scribe_extract_error(html) AS error,"
-        "       scribe_detect_format(html) AS fmt"
-        " FROM corpus").collect()}
+        "SELECT url, x.text, x.format, x.error, x.page_count,"
+        "       x.word_count, scribe_detect_format(html) AS fmt"
+        " FROM (SELECT url, html, scribe_extract(html) AS x FROM corpus)"
+    ).collect()}
     api_rows = {r["url"]: r for r in
                 extract_text(df, salt=False).collect()}
     assert sql_rows.keys() == api_rows.keys()
     for url, a in api_rows.items():
         s = sql_rows[url]
-        assert s["text"] == a["text"]
-        assert s["error"] == a["error"]
+        for field in ("text", "format", "error", "page_count",
+                      "word_count"):
+            assert s[field] == a[field], (url, field)
         assert s["fmt"] == a["format"]
 
 

@@ -46,6 +46,14 @@ def test_tiff_white_is_zero_and_rejects():
     data[i + 8] = 4
     with pytest.raises(NotImplementedError):
         decode_tiff(bytes(data))
+    # first IFD entry claims ~1G LONG values: rejected before the
+    # count sizes anything
+    data = bytearray(encode_tiff(gray))
+    base = int.from_bytes(data[4:8], "little") + 2
+    data[base + 2:base + 8] = (4).to_bytes(2, "little") + (
+        0x3FFFFFFF).to_bytes(4, "little")
+    with pytest.raises(ValueError, match="truncated tag data"):
+        decode_tiff(bytes(data))
 
 
 @pytest.mark.parametrize("top_down", [False, True])
