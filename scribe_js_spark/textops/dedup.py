@@ -21,10 +21,11 @@ the correctness oracles — the hash family is an implementation detail;
 verifiability is the requirement. Signatures are computed ONCE per
 plan side: band/block buckets come from ``posexplode`` over an array
 built from the materialized signature columns, never from per-band
-unions that would re-evaluate the signature — and since round 4 the
-band/block tables are ``persist()``-ed so the self-join's two sides
-(plus the hot-bucket cap count) share one computation; at corpus
-scale you would checkpoint the signature table instead.
+unions that would re-evaluate the signature. Every operator returns a
+lazy plan and caches nothing: the self-join's two sides (plus the
+hot-bucket cap count) each evaluate the band/block table, and a
+caller that reuses it — or runs at corpus scale — persists or
+checkpoints the signature table itself.
 
 All built-in column expressions / higher-order functions — no Python in
 the hot path.
@@ -278,15 +279,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             f"CAST(mh_{band * rows_per_band + r} AS STRING)"
             for r in range(rows_per_band)) + "))"
         for band in range(bands)) + ")")
-    # persisted: the bucket self-join otherwise recomputes the full
-    # shingle+md5 signature pipeline once per join side (plus once for
-    # the cap count). State is (doc_id, band, bucket) only — at corpus
-    # scale you would checkpoint the signature table instead.
-    from pyspark import StorageLevel
-
     band_rows = sig.select(
-        "doc_id", F.posexplode(buckets).alias("band", "bucket")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        "doc_id", F.posexplode(buckets).alias("band", "bucket"))
     if max_bucket_size is not None:
         ok = (band_rows.groupBy("band", "bucket")
               .agg(F.count("*").alias("_n"))
@@ -372,12 +366,9 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
         .bitwiseAND(F.lit(0x7FFF)).cast("long")
         for blk in range(SIMHASH_BLOCKS)
     ])
-    from pyspark import StorageLevel
-
     blocks = sh.select(
         "doc_id", "simhash",
-        F.posexplode(blk_vals).alias("blk", "blk_val")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        F.posexplode(blk_vals).alias("blk", "blk_val"))
     if max_bucket_size is not None:
         ok = (blocks.groupBy("blk", "blk_val")
               .agg(F.count("*").alias("_n"))

@@ -104,17 +104,13 @@ def image_near_dups(df: DataFrame, max_distance: int = 3,
     at corpus scale — same guard as minhash_lsh_pairs /
     embedding_near_dups; the self-join stays output-bound.
 
-    The pHash table is persisted before the self-join: the plan
-    otherwise re-runs the Arrow decode+DCT UDF once per join side
-    (plus once for the cap count) — 3x the dominant cost. The
-    persisted state is only (media_id, phash) — 16 bytes a row; at
-    corpus scale you would checkpoint it to a table instead."""
-    from pyspark import StorageLevel
-
+    The result is a lazy plan that caches nothing: each join side
+    (plus the cap count) runs the decode+DCT UDF. A caller that needs
+    the hashes more than once persists or writes :func:`phash_images`
+    output itself."""
     hashed = (phash_images(df, id_col, bytes_col)
               .filter(F.col("error").isNull())
-              .select("media_id", "phash")
-              .persist(StorageLevel.MEMORY_AND_DISK))
+              .select("media_id", "phash"))
     blocks = hashed.select(
         "media_id", "phash",
         F.posexplode(F.array(*[

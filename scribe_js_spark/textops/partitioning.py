@@ -14,7 +14,7 @@ optimizer's size estimate instead.
 
 ``spread_input`` round-robin-repartitions the (already projected)
 input to the cluster's default parallelism when the whole input is
-estimated under ``SPARK_GRAFT_SPREAD_MAX_BYTES`` (default 256 MB):
+estimated under :data:`SPREAD_MAX_BYTES` (256 MB):
 small enough that the one-off shuffle is negligible next to the
 per-row work it parallelizes, and far below anything a real corpus
 scan produces — at scale inputs arrive in hundreds of genuinely
@@ -28,14 +28,11 @@ are identical under any partitioning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: Inputs estimated smaller than this are spread to default
-#: parallelism; env-overridable for other deployments.
-SPREAD_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_SPREAD_MAX_BYTES", str(256 * 1024 * 1024)))
+#: parallelism.
+SPREAD_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:

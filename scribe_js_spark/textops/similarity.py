@@ -13,19 +13,15 @@
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as _F  # noqa: F401
 
 #: Corpus-size gate (optimizer estimate, bytes) under which the exact
 #: cosine verify of :func:`embedding_near_dups` runs as a numpy
 #: broadcast-gather instead of shipping both vectors through the pair
 #: join. At corpus scale the estimate exceeds this and the JVM join
-#: path runs unchanged; env-overridable for other deployments.
-EMB_BCAST_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EMB_BCAST_MAX_BYTES", str(64 * 1024 * 1024)))
+#: path runs unchanged.
+EMB_BCAST_MAX_BYTES = 64 * 1024 * 1024
 
 #: Floor below which the broadcast-gather verify is not worth its
 #: fixed setup (one driver collect + broadcast + an extra job):
@@ -34,12 +30,31 @@ EMB_BCAST_MAX_BYTES = int(os.environ.get(
 #: the gather wins 2.3x — candidate count grows ~quadratically with
 #: corpus rows, so a small size floor routes only the corpora where
 #: the verify dominates.
-EMB_BCAST_MIN_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EMB_BCAST_MIN_BYTES", str(2 * 1024 * 1024)))
+EMB_BCAST_MIN_BYTES = 2 * 1024 * 1024
 
 
-def _dot(a, b):
-    """Left-fold dot product over the full arrays (zip_with + aggregate).
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _doubles_sql(values) -> str:
+    """SQL array literal of doubles. ``CAST('<repr>' AS DOUBLE)``:
+    repr() round-trips a double exactly and the string-to-double cast
+    constant-folds to the identical Literal."""
+    return "array(" + ",".join(
+        f"CAST('{float(v)!r}' AS DOUBLE)" for v in values) + ")"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the left-fold dot product over the full arrays of
+    the named columns (``zip_with`` + ``aggregate`` over float64
+    casts).
+
+    Emitted as ONE parsed expression: building the same fold through
+    the Column-API lambda plumbing cost ~25 ms of py4j round trips per
+    fold at DataFrame-construction time (the same driver-side cost
+    class as lsh_bucket's literal arrays — see its docstring) for an
+    identical analyzed expression.
 
     Round-6 note (negative result, kept for the record): a fully
     unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` codegen expression was
@@ -53,41 +68,14 @@ def _dot(a, b):
     The round-6 wins here are structural instead: norms computed once
     per vector (not per pair) and the superfluous pair-``distinct``
     exchanges removed (see embedding_near_dups)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of the exact :func:`_dot` fold over named columns.
-
-    Emitting the fold as ONE parsed expression instead of the
-    Column-API lambda plumbing cuts ~25 ms of py4j round trips per
-    fold at DataFrame-construction time (the same driver-side cost
-    class as lsh_bucket's literal arrays — see its docstring); the
-    analyzed expression, and therefore every result bit, is
-    identical."""
     return (f"aggregate(zip_with({_ident(a)}, {_ident(b)}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)")
 
 
 def _norm_sql(a: str) -> str:
-    """SQL text of the exact :func:`_norm` (sqrt of the _dot fold)."""
+    """SQL text of the vector norm (sqrt of the :func:`_dot_sql`
+    fold of the column with itself)."""
     return f"sqrt({_dot_sql(a, a)})"
 
 
@@ -145,9 +133,6 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     broadcast everywhere; the corpus partitions by cell, so a query
     touches ``nprobe`` cells instead of the full corpus.
     """
-    import pyspark.sql.functions as F
-
-    spark = df.sparkSession
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
         lsh_bucket(vec_col, dim, n_planes_coarse).alias("bucket"))
@@ -158,7 +143,7 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     # computes round(avg(...), 6) too).
     cent_rows = (
         base.select("bucket", F.posexplode(
-            F.transform(F.col("vec"), lambda x: x.cast("double"))))
+            F.expr("transform(vec, x -> cast(x as double))")))
         .groupBy("bucket", "pos").agg(F.round(F.avg("col"), 6).alias("v"))
         .groupBy("bucket")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
@@ -167,28 +152,23 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     )
     centroids = [(int(r["bucket"]), list(r["centroid"])) for r in cent_rows]
 
-    def dist2_to(c_vals):
-        arr = F.array([F.lit(float(v)) for v in c_vals])
-        return F.aggregate(
-            F.zip_with(F.col("vec"), arr,
-                       lambda x, c: (x.cast("double") - c)
-                       * (x.cast("double") - c)),
-            F.lit(0.0), lambda acc, v: acc + v)
-
-    dists = F.array(*[
-        F.struct(dist2_to(c).alias("d"), F.lit(b).alias("cell"))
-        for b, c in centroids])
+    # (squared distance, cell) per centroid as one SQL text, with the
+    # centroid coordinates as lsh_bucket-style double literals
+    dists = "array(" + ", ".join(
+        f"named_struct('d', aggregate(zip_with(vec, {_doubles_sql(c)}, "
+        "(x, c) -> (cast(x as double) - c) * (cast(x as double) - c)), "
+        f"cast(0.0 as double), (acc, v) -> acc + v), 'cell', {b})"
+        for b, c in centroids) + ")"
     assigned = base.withColumn(
-        "cell", F.array_min(dists).getField("cell"))
+        "cell", F.expr(f"array_min({dists}).cell"))
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
     q_cells = (
         q.withColumn(
             "probe_cells",
-            F.slice(
-                F.transform(F.array_sort(dists), lambda s: s["cell"]),
-                1, nprobe))
+            F.expr(f"slice(transform(array_sort({dists}), s -> s.cell), "
+                   f"1, {int(nprobe)})"))
         .select("query_id", F.col("vec").alias("q_vec"),
                 F.explode("probe_cells").alias("cell"))
     )
@@ -197,7 +177,9 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
         assigned.join(F.broadcast(q_cells),
                       (assigned["cell"] == q_cells["cell"])
                       & (F.col("vid") != F.col("query_id")))
-        .withColumn("sim", cosine(F.col("q_vec"), F.col("vec")))
+        .withColumn("sim", F.expr(
+            f"{_dot_sql('q_vec', 'vec')} / "
+            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct()
     )
@@ -222,8 +204,9 @@ def _plane_coeff(plane: int, dim: int) -> float:
     return (h / (1 << 31)) - 1.0
 
 
-def lsh_bucket(vec_col, dim: int, n_planes: int = _N_PLANES_DEFAULT):
-    """Sign-of-projection bucket id (0 .. 2^n_planes-1) as a column.
+def lsh_bucket(vec_col: str, dim: int, n_planes: int = _N_PLANES_DEFAULT):
+    """Sign-of-projection bucket id (0 .. 2^n_planes-1) of the named
+    vector column, as a column.
 
     Stays the aggregate(zip_with(...)) fold at EXECUTION time: the
     round-6 unrolled rewrite (8 planes x 64 terms in one projection)
@@ -233,44 +216,25 @@ def lsh_bucket(vec_col, dim: int, n_planes: int = _N_PLANES_DEFAULT):
     materialize the id once and read it from the scan.
 
     CONSTRUCTION, however, was the hidden cost (round 6, late):
-    building this expression through the Column API issues ~70 py4j
+    building this expression through the Column API issued ~70 py4j
     round trips per plane (64 ``F.lit`` coefficient literals plus the
     lambda plumbing) — measured 0.56 s of driver-side Python per call,
     more than the query's whole execution at bench scale, and
-    ``ann_topk_lsh`` pays it twice per invocation. When the vector is
-    identified by NAME the same expression is emitted as ONE SQL
-    string (1.3 ms, 400x cheaper): coefficient literals ride as
-    ``CAST('<repr>' AS DOUBLE)`` — repr() round-trips doubles exactly
-    and the string-to-double cast constant-folds to the identical
-    Literal — and the fold text ``(x, w) -> cast(x as double) * w``
-    resolves to the same analyzed expression as the Column-API
-    lambdas, so the bucket ids are bit-identical (verified: 0
-    mismatches over 20k x 8 plane signs, and the plan is unchanged).
-    Pass a column NAME to get the fast path; Column inputs keep the
-    legacy construction."""
-    if isinstance(vec_col, str):
-        ident = "`" + vec_col.replace("`", "``") + "`"
-        parts = []
-        for p in range(n_planes):
-            arr = "array(" + ",".join(
-                f"CAST('{_plane_coeff(p, d)!r}' AS DOUBLE)"
-                for d in range(dim)) + ")"
-            proj = (f"aggregate(zip_with({ident}, {arr}, "
-                    "(x, w) -> cast(x as double) * w), "
-                    "cast(0.0 as double), (acc, v) -> acc + v)")
-            parts.append(
-                f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
-        return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
-    bucket = F.lit(0).cast("long")
+    ``ann_topk_lsh`` pays it twice per invocation. It is emitted as
+    ONE SQL string instead (1.3 ms, 400x cheaper): coefficient
+    literals ride as :func:`_doubles_sql` arrays, and the fold text
+    ``(x, w) -> cast(x as double) * w`` resolves to the same analyzed
+    expression the Column-API lambdas built, so the bucket ids are
+    bit-identical (verified: 0 mismatches over 20k x 8 plane signs,
+    and the plan is unchanged)."""
+    parts = []
     for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array([F.lit(_plane_coeff(p, d)) for d in range(dim)]),
-                lambda x, w: x.cast("double") * w),
-            F.lit(0.0), lambda acc, v: acc + v)
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
+        arr = _doubles_sql(_plane_coeff(p, d) for d in range(dim))
+        proj = (f"aggregate(zip_with({_ident(vec_col)}, {arr}, "
+                "(x, w) -> cast(x as double) * w), "
+                "cast(0.0 as double), (acc, v) -> acc + v)")
+        parts.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
@@ -310,7 +274,8 @@ _I64MIN = -(1 << 63)
 def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
                         threshold: float):
     """Exact-cosine verify of candidate pairs via a numpy
-    broadcast-gather, bit-identical to the JVM join + ``_dot`` fold.
+    broadcast-gather, bit-identical to the JVM join + ``_dot_sql``
+    fold.
 
     The JVM formulation ships BOTH 64-float vectors through the pair
     join for every candidate (15.2M pairs x ~540 B at the benchmark's
@@ -334,13 +299,16 @@ def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
     - NULL/duplicate ids, NULL vectors/elements, ragged lengths
       (the JVM fold's zip_with NULL semantics are row-specific there).
 
-    Semantics replicated from the JVM path (measured on this Spark,
-    ANSI mode): sim NULL is impossible here (gate excludes NULLs),
-    sim NaN is KEPT with sim_e6 = 0 (Spark orders NaN above any
-    threshold and floor-casts it to 0), +/-inf saturate the long cast,
-    a zero norm product raises (ANSI division by zero), and a pair
-    whose id was cap-filtered out of ``base`` is dropped exactly like
-    the inner join dropped it (membership check after searchsorted).
+    Semantics replicated from the JVM path: NULL vectors never reach
+    the fold (gate excludes them), sim NaN is KEPT with sim_e6 = 0
+    (Spark orders NaN above any threshold and floor-casts it to 0),
+    +/-inf saturate the long cast, and a pair whose id was
+    cap-filtered out of ``base`` is dropped exactly like the inner
+    join dropped it (membership check after searchsorted). A zero norm
+    product follows ``spark.sql.ansi.enabled`` as read when the plan
+    is built (the JVM division fixes its mode at analysis too): ANSI
+    on raises division by zero, ANSI off makes sim NULL, which the
+    threshold filter drops.
     """
     import numpy as np
 
@@ -384,6 +352,7 @@ def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
     norms = nrm.to_numpy()[order].astype(np.float64)
     bc = spark.sparkContext.broadcast((ids, V, norms))
     thr = float(threshold)
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
 
     def verify(it):
         import numpy as np
@@ -414,13 +383,14 @@ def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
             for i in range(A.shape[1]):  # exact left-fold order
                 acc += A[:, i] * B[:, i]
             denom = nrm_[ia] * nrm_[ib]
-            if (denom == 0).any():
+            nonzero = denom != 0
+            if ansi and not nonzero.all():
                 raise ArithmeticError(
                     "[DIVIDE_BY_ZERO] Division by zero (zero-norm "
                     "embedding in a candidate pair)")
             with np.errstate(all="ignore"):
                 sim = acc / denom
-                keep = (sim >= thr) | np.isnan(sim)
+                keep = ((sim >= thr) | np.isnan(sim)) & nonzero
                 f = np.floor(sim * 1e6)
             f = np.where(np.isnan(f), 0.0, np.clip(f, _I64MIN, _I64MAX))
             e6 = f.astype(np.int64)
@@ -458,8 +428,6 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     (``bucket_col``, or an ``lsh_bucket`` column auto-detected on the
     input — see :func:`with_lsh_bucket`) the per-row hyperplane
     projection is skipped entirely and the bucket rides the scan."""
-    from pyspark import StorageLevel
-
     from .partitioning import spread_input
 
     # spread the (one-row-group) corpus scan BEFORE the bucket/norm
@@ -472,11 +440,10 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
         _corpus_bucket(df, vec_col, dim, n_planes, bucket_col)
         .alias("bucket"),
-        # norm computed ONCE per vector at persist time — the verify
-        # stage previously re-derived both norms for every candidate
-        # pair (3 fold evaluations per pair; now 1)
-        F.expr(_norm_sql(vec_col)).alias("nrm")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # norm computed once per vector, below the pair join — the
+        # verify stage previously re-derived both norms for every
+        # candidate pair (3 fold evaluations per pair; now 1)
+        F.expr(_norm_sql(vec_col)).alias("nrm"))
     probes = base.select(
         "vid", "vec",
         F.explode(F.array(

@@ -8,6 +8,7 @@ were subtle."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -182,7 +183,7 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     assert all(a < b for a, b in pairs)
 
     # round-5 reference: distinct-ful candidates -> cosine verify
-    from scribe_js_spark.textops.similarity import cosine
+    from scribe_js_spark.textops.similarity import _dot_sql, _norm_sql
 
     b = with_lsh_bucket(df, dim=dim, n_planes=4)
     probes = b.select(
@@ -205,7 +206,9 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
                    F.col("embedding").alias("vb"))
     ref = (
         cand.join(va, "vec_a").join(vb, "vec_b")
-        .withColumn("sim", cosine(F.col("va"), F.col("vb")))
+        .withColumn("sim", F.expr(
+            f"{_dot_sql('va', 'vb')} / "
+            f"({_norm_sql('va')} * {_norm_sql('vb')})"))
         .filter(F.col("sim") >= 0.5)
         .select("vec_a", "vec_b",
                 F.floor(F.col("sim") * 1e6).cast("long").alias("sim_e6"))
@@ -217,14 +220,18 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     # sanity: the fixture actually produced pairs and spread buckets
     assert len(pairs) >= 10
     nb = df.select(lsh_bucket(
-        F.col("embedding"), dim, 4).alias("b")).distinct().count()
+        "embedding", dim, 4).alias("b")).distinct().count()
     assert nb >= 2
 
 
+#: Gate windows for _near_dup_rows. OPEN lies above any optimizer
+#: estimate: a createDataFrame input estimates at ~1.7e19 bytes, past
+#: any 64-bit window, so only a wider one reaches the numpy path.
+OPEN, SHUT = 1 << 80, 0
+
+
 def _with_gate(gate, fn):
-    """Run fn with the broadcast-verify gate window set to [0, gate):
-    gate=0 forces the JVM join + fold fallback; a large gate forces
-    the numpy broadcast-gather path for tiny fixtures."""
+    """Run fn with the broadcast-verify gate window set to [0, gate)."""
     from scribe_js_spark.textops import similarity as S
 
     old = (S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES)
@@ -235,10 +242,23 @@ def _with_gate(gate, fn):
         S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES = old
 
 
-def _near_dup_rows(df, **kw):
+def _near_dup_rows(df, gate, numpy_path=None, **kw):
+    """Sorted embedding_near_dups rows with the gate window [0, gate),
+    asserting which verify path the plan took: numpy (a MapInArrow
+    node) when ``numpy_path`` is true, the JVM join + fold when it is
+    false; by default the numpy path exactly when the gate is open."""
     from scribe_js_spark.textops.similarity import embedding_near_dups
 
-    return sorted(map(tuple, embedding_near_dups(df, **kw).collect()))
+    if numpy_path is None:
+        numpy_path = gate == OPEN
+
+    def run():
+        out = embedding_near_dups(df, **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInArrow" in plan) == numpy_path, plan
+        return sorted(map(tuple, out.collect()))
+
+    return _with_gate(gate, run)
 
 
 def test_embedding_verify_bcast_matches_jvm_fold(spark):
@@ -259,8 +279,8 @@ def test_embedding_verify_bcast_matches_jvm_fold(spark):
     rows.append((200, nanv))
     df = _vecs(spark, rows)
     kw = dict(threshold=0.5, dim=8, n_planes=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
+    fast = _near_dup_rows(df, OPEN, **kw)
+    jvm = _near_dup_rows(df, SHUT, **kw)
     assert fast == jvm
     nan_rows = [r for r in fast if 200 in r[:2]]
     assert nan_rows and all(r[2] == 0 for r in nan_rows)
@@ -282,12 +302,10 @@ def test_embedding_verify_bcast_cap_membership(spark):
     rows += [(500 + j, list(base)) for j in range(9)]
     df = _vecs(spark, rows)
     kw = dict(threshold=0.5, dim=8, n_planes=4, max_bucket_size=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
+    fast = _near_dup_rows(df, OPEN, **kw)
+    jvm = _near_dup_rows(df, SHUT, **kw)
     assert fast == jvm
-    uncapped = _with_gate(
-        1 << 30,
-        lambda: _near_dup_rows(df, threshold=0.5, dim=8, n_planes=4))
+    uncapped = _near_dup_rows(df, OPEN, threshold=0.5, dim=8, n_planes=4)
     assert len(fast) < len(uncapped)  # the cap actually bound
 
 
@@ -300,10 +318,37 @@ def test_embedding_verify_bcast_falls_back_on_ragged(spark):
     rows += [(300, [1.0, 2.0]), (301, None)]
     df = _vecs(spark, rows)
     kw = dict(threshold=0.5, dim=8, n_planes=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
+    # the open gate must still fall back to the JVM path here
+    fast = _near_dup_rows(df, OPEN, numpy_path=False, **kw)
+    jvm = _near_dup_rows(df, SHUT, **kw)
     assert fast == jvm
     assert all(300 not in r[:2] and 301 not in r[:2] for r in fast)
+
+
+def test_embedding_verify_zero_norm_follows_ansi(spark):
+    """Zero-norm vectors give both verify paths the same outcome under
+    either ANSI setting: with ANSI off the zero-denominator pairs have
+    a NULL sim and are dropped (identical rows), with ANSI on both
+    paths fail with division by zero."""
+    base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
+    rows = [(i, [x + i * 0.1 for x in base]) for i in range(12)]
+    rows += [(50, [0.0] * 8), (51, [0.0] * 8)]
+    df = _vecs(spark, rows)
+    kw = dict(threshold=0.5, dim=8, n_planes=4)
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        fast = _near_dup_rows(df, OPEN, **kw)
+        jvm = _near_dup_rows(df, SHUT, **kw)
+        assert fast == jvm
+        assert len(fast) == 66  # C(12, 2): every nonzero pair survives
+        assert all(50 not in r[:2] and 51 not in r[:2] for r in fast)
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for gate in (OPEN, SHUT):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                _near_dup_rows(df, gate, **kw)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_exact_dups_window_matches_join_shape(spark):

@@ -117,8 +117,9 @@ def main():
         "with K min() columns (8x faster than the interpreted "
         "transform/array_min passes; md5 per shingle is a per-row "
         "codegen expression). Band buckets still come from one "
-        "posexplode over the materialized mh_i columns, persisted so "
-        "the self-join's two sides share one computation.",
+        "posexplode over the materialized mh_i columns; nothing is "
+        "persisted, so each self-join side evaluates the band table "
+        "(a caller reusing it caches it).",
         out)
     from scribe_js_spark.textops.dedup import jaccard_for_pairs
     summarize(
@@ -170,7 +171,8 @@ def main():
         "most once and the whole query is one fused broadcast-join "
         "pipeline (the distinct was its only Exchange: 15.2M pair "
         "rows shuffled at 20k vectors); norms are computed once per "
-        "vector at persist time (was 3 fold evaluations per pair); "
+        "vector below the pair join (was 3 fold evaluations per "
+        "pair); "
         "spread_input parallelizes the one-row-group scan. Round 4: "
         "max_bucket_size drops degenerate buckets (all-identical "
         "embeddings) from the join key, bounding output by rows x "
