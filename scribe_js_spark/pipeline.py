@@ -94,9 +94,9 @@ def session_conf(builder):
         # multi-MB document rows: 16 MB/batch regardless of row count —
         # verified on this Spark: a batch closes when EITHER cap is hit,
         # for Arrow- and pandas-batched UDFs alike). The record cap is a
-        # secondary bound; 64 would fragment narrow-row Python stages
-        # (e.g. 16-byte pair rows) into ~10 us-a-piece micro-batches,
-        # so it sits at 4096 now that the byte cap carries the memory
+        # secondary bound; 64 would fragment a Python stage over rows
+        # of a few dozen bytes into ~10 us-a-piece micro-batches, so
+        # it sits at 4096 now that the byte cap carries the memory
         # contract.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 * 1024 * 1024))
@@ -511,8 +511,9 @@ def register_sql_functions(spark: SparkSession) -> None:
 
     - scribe_extract(binary) -> struct<text, format, error, page_count,
       word_count>: one parse per document, the same values as
-      ``extract_text`` (text NULL on parse failure)
-    - scribe_detect_format(binary) -> string (detection only, no parse)
+      ``extract_text`` (text NULL on parse failure, NULL html included)
+    - scribe_detect_format(binary) -> string (detection only, no parse;
+      NULL for NULL html)
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -522,13 +523,15 @@ def register_sql_functions(spark: SparkSession) -> None:
     def _extract(html):
         from .extract import extract_with_spans
 
-        recs = [extract_with_spans(bytes(b), with_spans=False) for b in html]
+        recs = [extract_with_spans(None if b is None else bytes(b),
+                                   with_spans=False) for b in html]
         return pd.DataFrame({f: [r[f] for r in recs] for f in fields})
 
     def _format(html):
         from .operators.detect import detect_document_format
 
-        return html.map(lambda b: detect_document_format(bytes(b)))
+        return html.map(lambda b: None if b is None
+                        else detect_document_format(bytes(b)))
 
     # `from __future__ import annotations` stringifies hints, which
     # pandas_udf cannot inspect — attach real type objects instead

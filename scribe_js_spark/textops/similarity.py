@@ -16,22 +16,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-#: Corpus-size gate (optimizer estimate, bytes) under which the exact
-#: cosine verify of :func:`embedding_near_dups` runs as a numpy
-#: broadcast-gather instead of shipping both vectors through the pair
-#: join. At corpus scale the estimate exceeds this and the JVM join
-#: path runs unchanged.
-EMB_BCAST_MAX_BYTES = 64 * 1024 * 1024
-
-#: Floor below which the broadcast-gather verify is not worth its
-#: fixed setup (one driver collect + broadcast + an extra job):
-#: measured interleaved at a 2k-vector corpus (~150k candidates) the
-#: JVM fold wins by ~0.13 s, while at 20k vectors (~15.2M candidates)
-#: the gather wins 2.3x — candidate count grows ~quadratically with
-#: corpus rows, so a small size floor routes only the corpora where
-#: the verify dominates.
-EMB_BCAST_MIN_BYTES = 2 * 1024 * 1024
-
 
 def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
@@ -267,143 +251,6 @@ def _corpus_bucket(df: DataFrame, vec_col: str, dim: int,
     return lsh_bucket(vec_col, dim, n_planes)
 
 
-_I64MAX = (1 << 63) - 1
-_I64MIN = -(1 << 63)
-
-
-def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
-                        threshold: float):
-    """Exact-cosine verify of candidate pairs via a numpy
-    broadcast-gather, bit-identical to the JVM join + ``_dot_sql``
-    fold.
-
-    The JVM formulation ships BOTH 64-float vectors through the pair
-    join for every candidate (15.2M pairs x ~540 B at the benchmark's
-    20k-vector scale) and then runs one interpreted ``aggregate``
-    lambda per element per pair. Guide §8's rule — decide with small
-    rows, move big rows once — applies: the pair join only needs ids,
-    and the whole vector table is a few MB. So: broadcast
-    (ids, vectors, norms) once, send ONLY the 16-byte id pairs across
-    the Arrow boundary, and gather + fold in numpy with the exact
-    left-fold order (``acc += A[:, i] * B[:, i]`` per position over
-    float64 casts — the same IEEE ops the JVM fold performs, verified
-    output-identical on 262,801 pairs). Measured at that scale:
-    4.5-4.9 s (JVM join+fold) -> 2.4-3.1 s.
-
-    Returns None when any exactness precondition fails — the caller
-    then uses the JVM path:
-    - corpus estimate outside [:data:`EMB_BCAST_MIN_BYTES`,
-      :data:`EMB_BCAST_MAX_BYTES`) (scale gate above, fixed-setup
-      amortization floor below),
-    - non-long ids (output column type must match the join's),
-    - NULL/duplicate ids, NULL vectors/elements, ragged lengths
-      (the JVM fold's zip_with NULL semantics are row-specific there).
-
-    Semantics replicated from the JVM path: NULL vectors never reach
-    the fold (gate excludes them), sim NaN is KEPT with sim_e6 = 0
-    (Spark orders NaN above any threshold and floor-casts it to 0),
-    +/-inf saturate the long cast, and a pair whose id was
-    cap-filtered out of ``base`` is dropped exactly like the inner
-    join dropped it (membership check after searchsorted). A zero norm
-    product follows ``spark.sql.ansi.enabled`` as read when the plan
-    is built (the JVM division fixes its mode at analysis too): ANSI
-    on raises division by zero, ANSI off makes sim NULL, which the
-    threshold filter drops.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import LongType
-
-    from .partitioning import _estimated_bytes
-
-    spark = base.sparkSession
-    est = _estimated_bytes(base)
-    if est is None or not (EMB_BCAST_MIN_BYTES <= est < EMB_BCAST_MAX_BYTES):
-        return None
-    schema = dict((f.name, f.dataType) for f in base.schema.fields)
-    if not isinstance(schema["vid"], LongType):
-        return None
-    try:
-        tbl = base.select("vid", "vec", "nrm").toArrow()
-    except Exception:
-        return None
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    vid = tbl["vid"].combine_chunks()
-    vec = tbl["vec"].combine_chunks()
-    nrm = tbl["nrm"].combine_chunks()
-    n = len(tbl)
-    if n == 0 or vid.null_count or vec.null_count or nrm.null_count:
-        return None
-    flat = vec.flatten()
-    if flat.null_count:
-        return None
-    lens = pc.list_value_length(vec).to_numpy()
-    if lens.min() != lens.max():
-        return None
-    dim = int(lens[0])
-    ids = vid.to_numpy()
-    if np.unique(ids).size != ids.size:
-        return None
-    order = np.argsort(ids)
-    ids = ids[order]
-    V = flat.to_numpy().reshape(n, dim)[order]
-    norms = nrm.to_numpy()[order].astype(np.float64)
-    bc = spark.sparkContext.broadcast((ids, V, norms))
-    thr = float(threshold)
-    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
-
-    def verify(it):
-        import numpy as np
-        import pyarrow as pa
-
-        ids_, V_, nrm_ = bc.value
-        Vd = V_.astype(np.float64)
-        hi = len(ids_) - 1
-        for batch in it:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            a = batch.column("vec_a").to_numpy(zero_copy_only=False)
-            b = batch.column("vec_b").to_numpy(zero_copy_only=False)
-            ia = np.clip(np.searchsorted(ids_, a), 0, hi)
-            ib = np.clip(np.searchsorted(ids_, b), 0, hi)
-            # inner-join semantics: drop pairs whose id is not in the
-            # (possibly cap-filtered) base table
-            member = (ids_[ia] == a) & (ids_[ib] == b)
-            if not member.all():
-                a, b = a[member], b[member]
-                ia, ib = ia[member], ib[member]
-                nrows = a.size
-                if nrows == 0:
-                    continue
-            A, B = Vd[ia], Vd[ib]
-            acc = np.zeros(nrows, dtype=np.float64)
-            for i in range(A.shape[1]):  # exact left-fold order
-                acc += A[:, i] * B[:, i]
-            denom = nrm_[ia] * nrm_[ib]
-            nonzero = denom != 0
-            if ansi and not nonzero.all():
-                raise ArithmeticError(
-                    "[DIVIDE_BY_ZERO] Division by zero (zero-norm "
-                    "embedding in a candidate pair)")
-            with np.errstate(all="ignore"):
-                sim = acc / denom
-                keep = ((sim >= thr) | np.isnan(sim)) & nonzero
-                f = np.floor(sim * 1e6)
-            f = np.where(np.isnan(f), 0.0, np.clip(f, _I64MIN, _I64MAX))
-            e6 = f.astype(np.int64)
-            idx = np.nonzero(keep)[0]
-            yield pa.record_batch({
-                "vec_a": pa.array(a[idx], type=pa.int64()),
-                "vec_b": pa.array(b[idx], type=pa.int64()),
-                "sim_e6": pa.array(e6[idx], type=pa.int64()),
-            })
-
-    return cand.mapInArrow(verify, "vec_a long, vec_b long, sim_e6 long")
-
-
 def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding", dim: int = 64,
@@ -476,13 +323,9 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
         .select(F.col("a.vid").alias("vec_a"),
                 F.col("b.vid").alias("vec_b"))
     )
-    # Small-corpus verify: numpy broadcast-gather over id-only pair
-    # rows (bit-identical fold; see _verify_pairs_bcast). Falls through
-    # to the JVM join + fold — the unchanged corpus-scale path — when
-    # the size gate or any exactness precondition fails.
-    fast = _verify_pairs_bcast(cand, base, threshold)
-    if fast is not None:
-        return fast
+    # Verify: both vectors join onto each candidate pair and the
+    # cosine is the JVM _dot_sql fold — lazy (no driver collect, no
+    # broadcast) and scale-safe at any corpus size.
     va = base.select(F.col("vid").alias("vec_a"),
                      F.col("vec").alias("va"), F.col("nrm").alias("na"))
     vb = base.select(F.col("vid").alias("vec_b"),

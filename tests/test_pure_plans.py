@@ -59,7 +59,7 @@ def _vec_df(spark):
     ]))
 
 
-def test_operators_leave_no_persisted_state(spark, monkeypatch):
+def test_operators_leave_no_persisted_state(spark):
     from scribe_js_spark.textops import similarity as S
     from scribe_js_spark.textops.dedup import (
         exact_dups,
@@ -79,13 +79,6 @@ def test_operators_leave_no_persisted_state(spark, monkeypatch):
     queries = vecs.filter(F.col("vec_id") < 3)
     vkw = dict(dim=8, n_planes=4)
 
-    def near_dups_numpy():
-        # a gate window above any estimate forces the numpy verify
-        with monkeypatch.context() as m:
-            m.setattr(S, "EMB_BCAST_MIN_BYTES", 0)
-            m.setattr(S, "EMB_BCAST_MAX_BYTES", 1 << 80)
-            return S.embedding_near_dups(vecs, threshold=0.5, **vkw)
-
     ops = {
         "exact_dups": lambda: exact_dups(docs),
         "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs),
@@ -97,9 +90,8 @@ def test_operators_leave_no_persisted_state(spark, monkeypatch):
         "simhash_candidates capped": lambda: simhash_candidates(
             docs, max_bucket_size=10),
         "image_near_dups": lambda: image_near_dups(_image_df(spark)),
-        "embedding_near_dups jvm": lambda: S.embedding_near_dups(
+        "embedding_near_dups": lambda: S.embedding_near_dups(
             vecs, threshold=0.5, **vkw),
-        "embedding_near_dups numpy": near_dups_numpy,
         "ann_topk_bruteforce": lambda: S.ann_topk_bruteforce(
             vecs, queries, k=3),
         "ann_topk_lsh": lambda: S.ann_topk_lsh(vecs, queries, k=3, **vkw),
@@ -161,3 +153,39 @@ def test_spread_input_leaves_large_input_unchanged(
         assert out.columns == ["id", "x"]
         assert _plan(out, "optimizedPlan") == _plan(ref, "optimizedPlan")
         assert "Exchange" not in _plan(out, "executedPlan")
+
+
+def test_embedding_near_dups_builds_a_lazy_plan(spark, tmp_path):
+    """Building embedding_near_dups runs no Spark job and plans no
+    Python stage, also for a mid-size input (estimate in [2 MB, 64 MB))
+    small enough that collecting its vectors to the driver would be
+    tempting."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scribe_js_spark.textops.partitioning import _estimated_bytes
+    from scribe_js_spark.textops.similarity import embedding_near_dups
+
+    n, dim = 9000, 64
+    vecs = np.random.RandomState(3).standard_normal((n, dim))
+    path = str(tmp_path / "vecs.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(np.arange(n), pa.int64()),
+        "embedding": pa.FixedSizeListArray.from_arrays(
+            pa.array(vecs.ravel(), pa.float32()), dim).cast(
+                pa.list_(pa.float32())),
+    }), path)
+    df = spark.read.parquet(path)
+    assert 2 << 20 < _estimated_bytes(df) < 64 << 20
+
+    sc = spark.sparkContext
+    group = "test-embedding-near-dups-build"
+    sc.setJobGroup(group, "embedding_near_dups construction")
+    try:
+        out = embedding_near_dups(df, threshold=0.9)
+        plan = _plan(out, "executedPlan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "MapInArrow" not in plan

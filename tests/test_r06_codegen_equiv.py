@@ -7,6 +7,7 @@ were subtle."""
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import (
@@ -224,112 +225,87 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     assert nb >= 2
 
 
-#: Gate windows for _near_dup_rows. OPEN lies above any optimizer
-#: estimate: a createDataFrame input estimates at ~1.7e19 bytes, past
-#: any 64-bit window, so only a wider one reaches the numpy path.
-OPEN, SHUT = 1 << 80, 0
-
-
-def _with_gate(gate, fn):
-    """Run fn with the broadcast-verify gate window set to [0, gate)."""
-    from scribe_js_spark.textops import similarity as S
-
-    old = (S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES)
-    S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES = 0, gate
-    try:
-        return fn()
-    finally:
-        S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES = old
-
-
-def _near_dup_rows(df, gate, numpy_path=None, **kw):
-    """Sorted embedding_near_dups rows with the gate window [0, gate),
-    asserting which verify path the plan took: numpy (a MapInArrow
-    node) when ``numpy_path`` is true, the JVM join + fold when it is
-    false; by default the numpy path exactly when the gate is open."""
+def _near_dup_rows(df, **kw):
+    """Sorted embedding_near_dups rows."""
     from scribe_js_spark.textops.similarity import embedding_near_dups
 
-    if numpy_path is None:
-        numpy_path = gate == OPEN
-
-    def run():
-        out = embedding_near_dups(df, **kw)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("MapInArrow" in plan) == numpy_path, plan
-        return sorted(map(tuple, out.collect()))
-
-    return _with_gate(gate, run)
+    return sorted(map(tuple, embedding_near_dups(df, **kw).collect()))
 
 
-def test_embedding_verify_bcast_matches_jvm_fold(spark):
-    """The numpy broadcast-gather verify must be bit-identical to the
-    JVM join + aggregate-fold path: same pairs, same sim_e6 (exact
-    left-fold order), NaN rows kept with sim_e6 = 0 (Spark orders NaN
-    above any threshold and floor-casts it to 0)."""
+def _cosine_e6(u, v):
+    """floor(cosine * 1e6) with the fold's exact float64 op order."""
+    import math
+
+    def dot(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc += float(np.float32(a)) * float(np.float32(b))
+        return acc
+
+    sim = dot(u, v) / (math.sqrt(dot(u, u)) * math.sqrt(dot(v, v)))
+    return math.floor(sim * 1e6)
+
+
+def _cluster_rows(n):
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = []
-    for i in range(40):
+    for i in range(n):
         v = list(base)
         v[i % 8] += (i // 8) * 2.5
         v[(i + 3) % 8] -= (i % 5) * 1.5
         rows.append((i, v))
+    return base, rows
+
+
+def test_embedding_verify_keeps_nan_and_exact_pairs(spark):
+    """The verify keeps every pair at or above the threshold with the
+    exact left-fold sim_e6, keeps NaN rows with sim_e6 = 0 (Spark
+    orders NaN above any threshold and floor-casts it to 0), and scores
+    an exact duplicate pair 1000000."""
+    base, rows = _cluster_rows(40)
     rows += [(100, list(base)), (101, list(base))]
     nanv = list(base)
     nanv[2] = float("nan")
     rows.append((200, nanv))
+    got = _near_dup_rows(_vecs(spark, rows), threshold=0.5, dim=8,
+                         n_planes=4)
+    nan_rows = [r for r in got if 200 in r[:2]]
+    assert nan_rows and all(r[2] == 0 for r in nan_rows)
+    assert (100, 101, 1000000) in got
+    vec = dict(rows)
+    for a, b, e6 in got:
+        if 200 not in (a, b):
+            assert e6 == _cosine_e6(vec[a], vec[b]) >= 500000, (a, b)
+
+
+def test_embedding_verify_cap_bounds_rows(spark):
+    """max_bucket_size drops the hot bucket's pairs: the capped output
+    is a strict subset of the uncapped one."""
+    base, rows = _cluster_rows(48)
+    rows += [(500 + j, list(base)) for j in range(9)]  # a hot bucket
     df = _vecs(spark, rows)
     kw = dict(threshold=0.5, dim=8, n_planes=4)
-    fast = _near_dup_rows(df, OPEN, **kw)
-    jvm = _near_dup_rows(df, SHUT, **kw)
-    assert fast == jvm
-    nan_rows = [r for r in fast if 200 in r[:2]]
-    assert nan_rows and all(r[2] == 0 for r in nan_rows)
-    assert (100, 101, 1000000) in fast
+    capped = _near_dup_rows(df, max_bucket_size=4, **kw)
+    uncapped = _near_dup_rows(df, **kw)
+    assert capped and set(capped) < set(uncapped)
 
 
-def test_embedding_verify_bcast_cap_membership(spark):
-    """With max_bucket_size, a pair whose a-side id was cap-filtered
-    out of base must be dropped exactly like the JVM inner join drops
-    it (searchsorted membership check)."""
-    base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
-    rows = []
-    for i in range(48):
-        v = list(base)
-        v[i % 8] += (i // 8) * 2.5
-        v[(i + 3) % 8] -= (i % 5) * 1.5
-        rows.append((i, v))
-    # a hot bucket: many exact copies
-    rows += [(500 + j, list(base)) for j in range(9)]
-    df = _vecs(spark, rows)
-    kw = dict(threshold=0.5, dim=8, n_planes=4, max_bucket_size=4)
-    fast = _near_dup_rows(df, OPEN, **kw)
-    jvm = _near_dup_rows(df, SHUT, **kw)
-    assert fast == jvm
-    uncapped = _near_dup_rows(df, OPEN, threshold=0.5, dim=8, n_planes=4)
-    assert len(fast) < len(uncapped)  # the cap actually bound
-
-
-def test_embedding_verify_bcast_falls_back_on_ragged(spark):
-    """Ragged / NULL vectors fail the gate's preconditions; the JVM
-    fold's zip_with NULL semantics then apply — outputs must still be
-    identical (both drop those rows)."""
+def test_embedding_verify_drops_ragged_and_null(spark):
+    """A ragged or NULL vector has a NULL sim under the zip_with fold,
+    so its pairs are dropped while the other pairs survive."""
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = [(i, [x + i * 0.1 for x in base]) for i in range(12)]
     rows += [(300, [1.0, 2.0]), (301, None)]
-    df = _vecs(spark, rows)
-    kw = dict(threshold=0.5, dim=8, n_planes=4)
-    # the open gate must still fall back to the JVM path here
-    fast = _near_dup_rows(df, OPEN, numpy_path=False, **kw)
-    jvm = _near_dup_rows(df, SHUT, **kw)
-    assert fast == jvm
-    assert all(300 not in r[:2] and 301 not in r[:2] for r in fast)
+    got = _near_dup_rows(_vecs(spark, rows), threshold=0.5, dim=8,
+                         n_planes=4)
+    assert got
+    assert all(300 not in r[:2] and 301 not in r[:2] for r in got)
 
 
 def test_embedding_verify_zero_norm_follows_ansi(spark):
-    """Zero-norm vectors give both verify paths the same outcome under
-    either ANSI setting: with ANSI off the zero-denominator pairs have
-    a NULL sim and are dropped (identical rows), with ANSI on both
-    paths fail with division by zero."""
+    """Zero-norm vectors follow spark.sql.ansi.enabled: with ANSI off
+    the zero-denominator pairs have a NULL sim and are dropped, with
+    ANSI on the query fails with division by zero."""
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = [(i, [x + i * 0.1 for x in base]) for i in range(12)]
     rows += [(50, [0.0] * 8), (51, [0.0] * 8)]
@@ -338,15 +314,12 @@ def test_embedding_verify_zero_norm_follows_ansi(spark):
     old = spark.conf.get("spark.sql.ansi.enabled")
     try:
         spark.conf.set("spark.sql.ansi.enabled", "false")
-        fast = _near_dup_rows(df, OPEN, **kw)
-        jvm = _near_dup_rows(df, SHUT, **kw)
-        assert fast == jvm
-        assert len(fast) == 66  # C(12, 2): every nonzero pair survives
-        assert all(50 not in r[:2] and 51 not in r[:2] for r in fast)
+        got = _near_dup_rows(df, **kw)
+        assert len(got) == 66  # C(12, 2): every nonzero pair survives
+        assert all(50 not in r[:2] and 51 not in r[:2] for r in got)
         spark.conf.set("spark.sql.ansi.enabled", "true")
-        for gate in (OPEN, SHUT):
-            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                _near_dup_rows(df, gate, **kw)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            _near_dup_rows(df, **kw)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
 

@@ -7,7 +7,10 @@ def test_sql_extraction_matches_dataframe_api(spark, tmp_path):
         extract_text, register_sql_functions)
 
     write_corpus_parquet(str(tmp_path), n_docs=10)
-    df = spark.read.parquet(str(tmp_path / "corpus.parquet"))
+    # plus one NULL-html row: an error row from both APIs, NULL format
+    df = spark.read.parquet(str(tmp_path / "corpus.parquet")).select(
+        "url", "html").unionByName(spark.sql(
+            "SELECT 'null-html' AS url, CAST(NULL AS BINARY) AS html"))
     df.createOrReplaceTempView("corpus")
     register_sql_functions(spark)
     sql_rows = {r["url"]: r for r in spark.sql(
@@ -24,6 +27,8 @@ def test_sql_extraction_matches_dataframe_api(spark, tmp_path):
                       "word_count"):
             assert s[field] == a[field], (url, field)
         assert s["fmt"] == a["format"]
+    assert api_rows["null-html"]["error"]
+    assert sql_rows["null-html"]["fmt"] is None
 
 
 def test_cli_tables_verb(spark, tmp_path):
